@@ -36,8 +36,9 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: bounded-median of lineitem extended price per return flag,
-    via the scalable two-phase reservoir operator (the reference's one
-    function, distributed the reference's way)."""
+    via the reservoir operator — the JVM Aggregator's partial+final
+    aggregation (the reference's one function, distributed the reference's
+    way)."""
     register_all(spark)
     register_temp_views(spark, SF_SMOKE)
     return MEDIAN_QUERIES["appx_median_price_by_returnflag"](spark, SF_SMOKE)

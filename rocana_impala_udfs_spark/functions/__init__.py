@@ -4,16 +4,16 @@ from rocana_impala_udfs_spark.functions.median import (
     ReservoirState,
     appx_median_bounded,
     appx_median_bounded_str,
+    appx_percentile_bounded,
     exact_upper_median,
-    make_appx_median_bounded_udf,
-    make_reservoir_sample_udf,
+    reservoir_sample,
 )
 
 __all__ = [
     "ReservoirState",
     "appx_median_bounded",
     "appx_median_bounded_str",
+    "appx_percentile_bounded",
     "exact_upper_median",
-    "make_appx_median_bounded_udf",
-    "make_reservoir_sample_udf",
+    "reservoir_sample",
 ]

@@ -1,6 +1,5 @@
 package rocana.spark.udaf;
 
-import java.util.ArrayList;
 import java.util.List;
 import org.apache.spark.sql.Row;
 import org.apache.spark.sql.expressions.MutableAggregationBuffer;
@@ -30,11 +29,10 @@ import org.apache.spark.sql.types.StructType;
  *
  * Every phase DELEGATES to {@link AppxMedianBounded} (reduce/merge/finish
  * are the single source of truth for the median.cc protocol); this class
- * only converts between the engine-managed Catalyst buffer row and
- * {@link ReservoirBuf}. That conversion copies the k-bounded arrays once
- * per row, so the typed Aggregator ({@code appx_median_bounded_1call})
- * remains the production path — this adapter exists for DDL parity, and
- * its buffer stays the same bounded k-sample state on the wire.
+ * only moves its {@code double[]} buffer in and out of the engine-managed
+ * Catalyst buffer row. That copies the k-bounded array once per row, so
+ * the typed Aggregator ({@code appx_median_bounded_1call}) remains the
+ * production path — this adapter exists for DDL parity.
  */
 public class AppxMedianBoundedDDL extends UserDefinedAggregateFunction {
 
@@ -52,11 +50,7 @@ public class AppxMedianBoundedDDL extends UserDefinedAggregateFunction {
   public StructType bufferSchema() {
     return new StructType(new StructField[] {
       DataTypes.createStructField(
-          "vals", DataTypes.createArrayType(DataTypes.DoubleType, false), false),
-      DataTypes.createStructField(
-          "keys", DataTypes.createArrayType(DataTypes.DoubleType, false), false),
-      DataTypes.createStructField("sourceSize", DataTypes.LongType, false),
-      DataTypes.createStructField("maxSamples", DataTypes.IntegerType, false),
+          "buf", DataTypes.createArrayType(DataTypes.DoubleType, false), false),
     });
   }
 
@@ -65,11 +59,9 @@ public class AppxMedianBoundedDDL extends UserDefinedAggregateFunction {
     return DataTypes.StringType;
   }
 
-  /** Declared deterministic for the same reason the registered pandas
-   * UDAFs are: in the exact regime (group size &le; k, the oracle-checked
-   * contract) every input is retained and the answer is a pure function
-   * of the group; the sampled regime is approximate by declaration
-   * (reference median.h:27-29). */
+  /** Declared deterministic: in the exact regime (group size &le; k, the
+   * oracle-checked contract) every input is retained and the answer is a
+   * pure function of the group; the sampled regime is seeded. */
   @Override
   public boolean deterministic() {
     return true;
@@ -77,43 +69,26 @@ public class AppxMedianBoundedDDL extends UserDefinedAggregateFunction {
 
   @Override
   public void initialize(MutableAggregationBuffer buffer) {
-    write(buffer, new ReservoirBuf());
+    buffer.update(0, AGG.zero());
   }
 
   @Override
   public void update(MutableAggregationBuffer buffer, Row input) {
-    ReservoirBuf b = read(buffer);
-    AGG.reduce(b, input);
-    write(buffer, b);
+    buffer.update(0, AGG.reduce(read(buffer), input));
   }
 
   @Override
   public void merge(MutableAggregationBuffer buffer, Row other) {
-    write(buffer, AGG.merge(read(buffer), read(other)));
+    buffer.update(0, AGG.merge(read(buffer), read(other)));
   }
 
   @Override
-  public String evaluate(Row buffer) {
+  public Object evaluate(Row buffer) {
     return AGG.finish(read(buffer));
   }
 
-  private static ReservoirBuf read(Row row) {
-    ReservoirBuf b = new ReservoirBuf();
-    b.setVals(new ArrayList<>(row.<Double>getList(0)));
-    b.setKeys(new ArrayList<>(row.<Double>getList(1)));
-    b.setSourceSize(row.getLong(2));
-    b.setMaxSamples(row.getInt(3));
-    return b;
-  }
-
-  private static void write(MutableAggregationBuffer buffer, ReservoirBuf b) {
-    buffer.update(0, toArray(b.getVals()));
-    buffer.update(1, toArray(b.getKeys()));
-    buffer.update(2, b.getSourceSize());
-    buffer.update(3, b.getMaxSamples());
-  }
-
-  private static double[] toArray(List<Double> xs) {
+  private static double[] read(Row row) {
+    List<Double> xs = row.getList(0);
     double[] out = new double[xs.size()];
     for (int i = 0; i < out.length; i++) {
       out[i] = xs.get(i);

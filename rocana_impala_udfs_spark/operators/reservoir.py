@@ -1,109 +1,28 @@
-"""Two-phase distributed reservoir aggregation — the reference's five-phase
-UDA protocol (init/update/serialize/merge/finalize, ``median.cc:117-304``)
-re-expressed on Spark's execution model with true map-side partial
-aggregation.
+"""Distributed reservoir aggregation — the reference's five-phase UDA
+protocol (init/update/serialize/merge/finalize, ``median.cc:117-304``) as a
+DataFrame operator.
 
-Why this exists: PySpark's grouped-agg pandas UDFs ship *whole groups* to one
-worker — no partial aggregation — which is wrong at 100 TB. This operator
-restores the reference's distributed shape:
-
-- **Phase 1 (partial)** — ``mapInPandas`` over the scan: one bounded
-  :class:`ReservoirState` per group per *partition* (init ``median.cc:117``,
-  update ``median.cc:128``). Arrow batches stream through; state stays
-  O(groups × max_samples) per task.
-- **Serialize boundary** — weight keys assigned per partial exactly as the
-  reference does at its shuffle boundary (``median.cc:176-192``), so larger
-  partitions win merges proportionally. Only ``max_samples`` values per group
-  per partition cross the exchange.
-- **Phase 2 (final)** — ``groupBy(keys).applyInPandas``: key-weighted heap
-  merge (``median.cc:263-280``) + upper-median finalize (``median.cc:299-301``).
-
-Shuffle volume is ≤ partitions × groups × max_samples samples — independent
-of input row count, which is the whole point of the reference's bounded
-design.
+Each operator is ``df.groupBy(group_cols).agg(<JVM aggregate column>)``
+over the one reservoir ``Aggregator`` (:mod:`rocana_impala_udfs_spark.jvm`):
+Spark plans it as a partial ObjectHashAggregate per partition (init
+``median.cc:117``, update ``median.cc:128``), an exchange that carries only
+≤ ``max_samples`` samples per group per partition, and a final
+ObjectHashAggregate that keys and merges the partials (``median.cc:176-192``,
+``median.cc:263-280``) and finalizes (``median.cc:299-301``). Shuffle volume
+is independent of the input row count, which is the whole point of the
+reference's bounded design. Group columns keep their types; a global
+aggregate over empty input returns one NULL row (``median.cc:295-298``).
 """
 
 from __future__ import annotations
 
-import zlib
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from rocana_impala_udfs_spark.functions.median import DEFAULT_SEED, ReservoirState
-
-
-def _stable_seed(seed: int, key: tuple) -> int:
-    return (seed + zlib.crc32(repr(key).encode())) % (2**31)
-
-
-def reservoir_partials(
-    df: DataFrame,
-    value_col: str,
-    max_samples: int,
-    group_cols: list[str] | None = None,
-    seed: int = DEFAULT_SEED,
-) -> DataFrame:
-    """Phase 1: per-partition, per-group bounded reservoirs (partial agg).
-
-    Returns one row per (partition, group): ``group_cols… (as STRING),
-    samples ARRAY<DOUBLE>, keys ARRAY<DOUBLE>, source_size BIGINT`` — the
-    serialized aggregation state, weight keys already assigned (serialize
-    semantics, ``median.cc:165-194``).
-    """
-    group_cols = list(group_cols or [])
-    proj = [F.col(c).cast("string").alias(c) for c in group_cols]
-    # carry an explicit null flag: the Arrow→pandas bridge conflates SQL
-    # NULL and NaN into NaN, and the reference skips only is_null
-    # (median.cc:130-131) — NaN data must be SAMPLED, like the arrow-UDF
-    # and JVM paths since r10 (NaN-divergence closure)
-    src = df.select(
-        *proj,
-        F.col(value_col).cast("double").alias("_v"),
-        F.col(value_col).isNull().alias("_vnull"),
-    )
-    schema = (
-        ", ".join(f"`{c}` string" for c in group_cols)
-        + (", " if group_cols else "")
-        + "samples array<double>, keys array<double>, source_size bigint"
-    )
-    out_cols = group_cols + ["samples", "keys", "source_size"]
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Mix the partition id into the seed: with a group-only seed every
-        # partition's partial for a group shares one RNG stream, correlating
-        # saturated-path accept decisions and serialize keys across
-        # partitions and mildly biasing the merged sample.
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        states: dict[tuple, ReservoirState] = {}
-        for pdf in batches:
-            if group_cols:
-                grouped = pdf.groupby(group_cols, sort=False, dropna=False)
-            else:
-                grouped = [((), pdf)]
-            for gk, sub in grouped:
-                gk = gk if isinstance(gk, tuple) else (gk,)
-                st = states.get(gk)
-                if st is None:
-                    st = ReservoirState(max_samples, seed=_stable_seed(seed, (pid, *gk)))
-                    states[gk] = st
-                st.update(
-                    sub["_v"].to_numpy(dtype=np.float64),
-                    null_mask=sub["_vnull"].to_numpy(dtype=bool),
-                )
-        rows = []
-        for gk, st in states.items():
-            st.assign_keys()
-            rows.append([*gk, st.sample_values().tolist(), st.keys.tolist(), st.source_size])
-        yield pd.DataFrame(rows, columns=out_cols) if rows else pd.DataFrame(columns=out_cols)
-
-    return src.mapInPandas(partial, schema=schema)
+from rocana_impala_udfs_spark.functions.median import (
+    DEFAULT_SEED,
+    appx_percentile_bounded,
+    reservoir_sample,
+)
 
 
 def reservoir_sample_agg(
@@ -118,41 +37,9 @@ def reservoir_sample_agg(
     per group, returned as a sorted ARRAY<DOUBLE> (sorted so results are
     deterministic whenever the reservoir is unsaturated — every non-null
     value retained exactly once, matching ``max_samples >= n`` semantics of
-    median-test.cc:66-82).
-
-    Same two-phase distributed shape as :func:`appx_median_bounded_agg`:
-    bounded partials per partition, key-weighted heap merge after one
-    shuffle of ≤ partitions × groups × max_samples samples.
-    """
-    group_cols = list(group_cols or [])
-    partials = reservoir_partials(df, value_col, max_samples, group_cols, seed)
-    schema = (
-        ", ".join(f"`{c}` string" for c in group_cols)
-        + (", " if group_cols else "")
-        + f"`{out}` array<double>"
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: ReservoirState | None = None
-        for row in pdf.itertuples(index=False):
-            st = ReservoirState(max_samples, seed=seed)
-            st.vals = np.asarray(row.samples, dtype=np.float64)
-            st.keys = np.asarray(row.keys, dtype=np.float64)
-            st.source_size = int(row.source_size)
-            acc = st if acc is None else (acc.merge(st) or acc)
-        vals = np.sort(acc.sample_values()).tolist() if acc is not None else []
-        head = [pdf.iloc[0][c] for c in group_cols]
-        return pd.DataFrame([head + [vals]], columns=group_cols + [out])
-
-    if group_cols:
-        result = partials.groupBy(*group_cols).applyInPandas(merge_group, schema=schema)
-        orig_types = {f.name: f.dataType.simpleString() for f in df.select(*group_cols).schema.fields}
-        return result.select(
-            *[F.col(c).cast(orig_types[c]).alias(c) for c in group_cols], F.col(out)
-        )
-    return partials.groupBy(F.lit(1).alias("_one")).applyInPandas(
-        lambda pdf: merge_group(pdf).assign(_one=1), schema=f"`{out}` array<double>, `_one` int"
-    ).select(out)
+    median-test.cc:66-82)."""
+    col = reservoir_sample(value_col, max_samples, seed)
+    return df.groupBy(*(group_cols or [])).agg(col.alias(out))
 
 
 def appx_median_bounded_agg(
@@ -163,13 +50,9 @@ def appx_median_bounded_agg(
     out: str = "median",
     seed: int = DEFAULT_SEED,
 ) -> DataFrame:
-    """Full two-phase bounded-median aggregation.
-
-    ``appx_median_bounded(value_col, max_samples) GROUP BY group_cols`` with
-    the reference's exact semantics, but scalable: the shuffle carries only
-    serialized reservoir states. Exact when each group has ≤ ``max_samples``
-    non-null rows. Group columns come back with their original types.
-    """
+    """``appx_median_bounded(value_col, max_samples) GROUP BY group_cols``
+    with the reference's exact semantics; exact when each group has
+    ≤ ``max_samples`` non-null rows."""
     return appx_percentile_bounded_agg(
         df, value_col, 0.5, max_samples, group_cols, out, seed
     )
@@ -185,48 +68,8 @@ def appx_percentile_bounded_agg(
     seed: int = DEFAULT_SEED,
 ) -> DataFrame:
     """The reference's bounded-reservoir aggregate generalized to any
-    percentile: identical five-phase protocol and shuffle bound, finalize
-    picks sorted[min(floor(n*p), n-1)] (p=0.5 == the reference's
-    upper-median rule, ``median.cc:299-301``). Exact whenever each group
-    has ≤ ``max_samples`` non-null rows."""
-    if not 0.0 <= p <= 1.0:
-        raise ValueError(f"percentile p must be in [0, 1], got {p}")
-    group_cols = list(group_cols or [])
-    partials = reservoir_partials(df, value_col, max_samples, group_cols, seed)
-    schema = (
-        ", ".join(f"`{c}` string" for c in group_cols)
-        + (", " if group_cols else "")
-        + f"`{out}` double"
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: ReservoirState | None = None
-        for row in pdf.itertuples(index=False):
-            st = ReservoirState(max_samples, seed=seed)
-            st.vals = np.asarray(row.samples, dtype=np.float64)
-            st.keys = np.asarray(row.keys, dtype=np.float64)
-            st.source_size = int(row.source_size)
-            acc = st if acc is None else (acc.merge(st) or acc)
-        median = acc.finalize_percentile(p) if acc is not None else None
-        head = [pdf.iloc[0][c] for c in group_cols]
-        return pd.DataFrame([head + [median]], columns=group_cols + [out])
-
-    if group_cols:
-        result = partials.groupBy(*group_cols).applyInPandas(merge_group, schema=schema)
-        orig_types = {f.name: f.dataType.simpleString() for f in df.select(*group_cols).schema.fields}
-        return result.select(
-            *[F.col(c).cast(orig_types[c]).alias(c) for c in group_cols], F.col(out)
-        )
-    # Global aggregate: a single merge group; empty input => one NULL row
-    # (median.cc:295-298) via a sentinel union.
-    merged = partials.groupBy(F.lit(1).alias("_one")).applyInPandas(
-        lambda pdf: merge_group(pdf).assign(_one=1)[[f for f in [out, "_one"]]],
-        schema=f"`{out}` double, `_one` int",
-    )
-    sentinel = df.sparkSession.range(1).select(F.lit(None).cast("double").alias(out), F.lit(0).alias("_one"))
-    return (
-        merged.unionByName(sentinel)
-        .orderBy(F.col("_one").desc())
-        .limit(1)
-        .select(out)
-    )
+    percentile: finalize picks sorted[min(floor(n*p), n-1)] (p=0.5 == the
+    reference's upper-median rule, ``median.cc:299-301``). Exact whenever
+    each group has ≤ ``max_samples`` non-null rows."""
+    col = appx_percentile_bounded(value_col, p, max_samples, seed)
+    return df.groupBy(*(group_cols or [])).agg(col.alias(out))

@@ -98,16 +98,14 @@ def q_median_sql_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_median_sql_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCALABLE SQL form of the reference's protocol: the grouped-agg
-    convenience UDAF (q_median_sql_udaf) ships whole groups to one worker,
-    so here the first GROUP BY is salted — every shipped group is bounded to
-    ~1/16 of its rows — and ``reservoir_partial`` (update+serialize,
-    median.cc:128-194) emits bounded serialized states that
-    ``reservoir_merge_median`` (merge+finalize, median.cc:228-304) combines
-    per real group. Intermediate state is ≤ 16 × max_samples values per
-    group no matter the input size: the reference's own answer to large
-    groups, expressed in two SQL aggregates. Exact here because BIG_K keeps
-    every reservoir unsaturated (median-test.cc:66-82 semantics)."""
+    """The protocol's two halves as separate SQL aggregates: the first
+    GROUP BY is salted, ``reservoir_partial`` (update+serialize,
+    median.cc:128-194) emits each salt group's bounded state as a flat
+    ARRAY<DOUBLE>, and ``reservoir_merge_median`` (merge+finalize,
+    median.cc:228-304) combines them per real group. Both are finishers of
+    the one JVM Aggregator, so each statement is itself a partial+final
+    aggregation. Exact here because BIG_K keeps every reservoir
+    unsaturated (median-test.cc:66-82 semantics)."""
     register_all(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("_li_twophase")
     return spark.sql(
@@ -124,16 +122,15 @@ def q_median_sql_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_median_sql_onecall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ONE-statement scalable SQL median: the JVM ``Aggregator``
-    (jvm/rocana-udaf.jar, the five-phase protocol of ``median.cc`` in
-    ~150 lines of Java) registered into the session catalog, so the
-    reference's exact DDL ergonomics — ``SELECT appx_median_bounded(x, k)
-    FROM t GROUP BY g`` as a single call (README.md:40-46) — run with
-    GENUINE partial+final aggregation: Spark plans ObjectHashAggregate
-    partial/final, each executor reduces its partitions to one ≤ k-sample
-    reservoir, and only serialized buffers cross the exchange — the same
-    wire shape as the reference's Impala UDA, no salting needed. Exact
-    here because BIG_K keeps every reservoir unsaturated
+    """The ONE-statement SQL median under its older name,
+    ``appx_median_bounded_1call``: the JVM ``Aggregator``
+    (jvm/rocana-udaf.jar) registered into the session catalog, so
+    ``SELECT appx_median_bounded(x, k) FROM t GROUP BY g`` as a single call
+    (README.md:40-46) runs with genuine partial+final aggregation: Spark
+    plans ObjectHashAggregate partial/final, each executor reduces its
+    partitions to one ≤ k-sample reservoir, and only serialized buffers
+    cross the exchange — the same wire shape as the reference's Impala UDA.
+    Exact here because BIG_K keeps every reservoir unsaturated
     (median-test.cc:66-82 semantics)."""
     register_all(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("_li_onecall")
@@ -276,20 +273,19 @@ SELECT c_mktsegment, x AS median_name10 FROM (
 def q_window_median_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UDAF used as a window function (SURVEY §2.2 'a windowed
     appx_median_bounded falls out of registration'): per-row median of the
-    row's return-flag partition, via the grouped-agg pandas UDF over an
-    unbounded window."""
+    row's return-flag partition, the JVM Aggregator over an unbounded
+    window."""
     from pyspark.sql import Window
 
-    from rocana_impala_udfs_spark.functions.median import make_appx_median_bounded_udf
+    from rocana_impala_udfs_spark.functions.median import appx_median_bounded
 
     li = load_table(spark, sf_dir, "lineitem")
-    udf = make_appx_median_bounded_udf()
     w = Window.partitionBy("l_returnflag")
     return li.select(
         "l_orderkey",
         "l_linenumber",
         "l_returnflag",
-        udf(F.col("l_quantity"), F.lit(BIG_K)).over(w).alias("flag_median_qty"),
+        appx_median_bounded("l_quantity", BIG_K).over(w).alias("flag_median_qty"),
     )
 
 

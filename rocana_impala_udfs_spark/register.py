@@ -1,9 +1,10 @@
 """Function registration — the reference's ``CREATE AGGREGATE FUNCTION``
-surface (reference ``README.md:37-47``) mapped to ``spark.udf.register``.
+surface (reference ``README.md:37-47``) mapped to the session catalog.
 
 The reference distributes a ``.so`` via HDFS and binds five C symbols with
-DDL; Spark ships Python UDF code to executors automatically over the
-Arrow/py4j worker protocol, so registration is one call per function:
+DDL; here the whole median family is one JVM ``Aggregator`` in the
+committed ``jvm/rocana-udaf.jar``, registered under every SQL name in one
+call:
 
     register_all(spark)
     spark.sql("SELECT CAST(appx_median_bounded(x, 5) AS DOUBLE) FROM numbers")
@@ -11,53 +12,26 @@ Arrow/py4j worker protocol, so registration is one call per function:
 ``appx_median_bounded`` is registered with the reference's STRING return type
 so the documented ``CAST(... AS DOUBLE)`` idiom (reference ``README.md:61``)
 works verbatim; ``appx_median_bounded_double`` is the idiomatic typed variant.
+Every name runs with genuine partial+final aggregation, so
+``appx_median_bounded_1call`` is the same function under its older name and
+the salted two-statement form (``reservoir_partial`` over a salted GROUP BY,
+then ``reservoir_merge_median``) is kept for callers that want the
+serialized state in SQL.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from rocana_impala_udfs_spark.functions.median import (
-    make_appx_median_bounded_str_udf,
-    make_appx_median_bounded_udf,
-    make_appx_percentile_bounded_udf,
-    make_reservoir_merge_median_udf,
-    make_reservoir_partial_udf,
-    make_reservoir_sample_udf,
-)
+from rocana_impala_udfs_spark.functions.median import DEFAULT_SEED
+from rocana_impala_udfs_spark.jvm import register_jvm_udaf
 
 
 def register_all(spark: SparkSession) -> SparkSession:
     """Register every engine function into the session catalog."""
     from rocana_impala_udfs_spark.functions import text as text_fns
 
-    spark.udf.register("appx_median_bounded", make_appx_median_bounded_str_udf())
-    # byte-parity flavor: formats like the reference's ToStringVal
-    # (stringstream precision-6, median.cc:29-37)
-    spark.udf.register(
-        "appx_median_bounded_ref_format", make_appx_median_bounded_str_udf(cpp_format=True)
-    )
-    spark.udf.register("appx_median_bounded_double", make_appx_median_bounded_udf())
-    spark.udf.register("appx_percentile_bounded", make_appx_percentile_bounded_udf())
-    spark.udf.register("reservoir_sample", make_reservoir_sample_udf())
-    # Scalable SQL form of the five-phase protocol: a grouped-agg pandas UDF
-    # ships WHOLE groups to one worker (no partial aggregation), so plain
-    # `appx_median_bounded(x, k)` is the convenience path only. The 100 TB
-    # SQL idiom salts the first GROUP BY to bound every shipped group, then
-    # merges the serialized partials:
-    #   WITH p AS (SELECT grp, reservoir_partial(x, k) AS s
-    #              FROM t GROUP BY grp, pmod(hash(id), 16))
-    #   SELECT grp, reservoir_merge_median(s) FROM p GROUP BY grp
-    spark.udf.register("reservoir_partial", make_reservoir_partial_udf())
-    spark.udf.register("reservoir_merge_median", make_reservoir_merge_median_udf())
-    # One-STATEMENT scalable form: a JVM Aggregator (jvm/rocana-udaf.jar)
-    # with genuine partial+final aggregation — `SELECT
-    # appx_median_bounded_1call(x, k) FROM t GROUP BY g` matches the
-    # reference's single-call DDL ergonomics at any scale. Soft-fails to
-    # False if the jar/JVM bridge is unavailable.
-    from rocana_impala_udfs_spark.jvm import register_jvm_udaf
-
-    register_jvm_udaf(spark)
+    register_jvm_udaf(spark, DEFAULT_SEED)
     text_fns.register(spark)
 
     from rocana_impala_udfs_spark.functions import udtfs

@@ -10,6 +10,7 @@ import pytest
 
 from rocana_impala_udfs_spark.functions.median import ReservoirState, exact_upper_median
 from rocana_impala_udfs_spark.operators.reservoir import appx_median_bounded_agg
+from rocana_impala_udfs_spark.plans.medians import MEDIAN_QUERIES
 
 ABS = 1e-5  # FuzzyCompare tolerance, median-test.cc:32-36
 
@@ -18,17 +19,15 @@ ABS = 1e-5  # FuzzyCompare tolerance, median-test.cc:32-36
 
 
 def test_empty_input_is_null_sql(spark):
-    # Known Spark divergence: a *global* pandas-UDAF over an empty relation
-    # yields zero rows (AggregateInPandas emits nothing), where the reference
-    # host engine yields one NULL row (median.cc:295-298). The operator path
-    # (next test) restores reference semantics. Grouped queries are
-    # unaffected (no groups => no rows in both engines).
+    # A global aggregate over an empty relation yields one NULL row, as the
+    # reference host engine does (median.cc:295-298). Grouped queries have
+    # no groups => no rows in both engines.
     df = spark.createDataFrame([], "x double")
     df.createOrReplaceTempView("empty_doubles")
     out = spark.sql(
         "SELECT CAST(appx_median_bounded(x, 10) AS DOUBLE) AS m FROM empty_doubles"
     ).collect()
-    assert out == [] or out[0].m is None
+    assert len(out) == 1 and out[0].m is None
 
 
 def test_empty_input_is_null_operator(spark):
@@ -88,14 +87,10 @@ def test_all_null_is_null(spark):
 
 
 def test_nan_parity_python_vs_jvm_udaf(spark):
-    """r10 NaN-divergence closure (VERDICT r9 #3): the Python UDAF now
-    receives pyarrow Arrays whose validity bitmap distinguishes SQL NULL
-    from NaN data, so — exactly like the reference (median.cc:130-131
-    skips only is_null) and the JVM path (AppxMedianBounded.java, NaN
-    sampled under Double.compare's total order, sorts last) — NULLs are
-    skipped and NaN is SAMPLED. Both registered paths must agree on
-    NaN-bearing input; the pre-r10 pandas path returned 2.0 here (NaN
-    silently dropped)."""
+    """Exactly like the reference (median.cc:130-131 skips only is_null),
+    NULLs are skipped and NaN is SAMPLED (Double.compare's total order,
+    NaN sorts last). Every entry point — the STRING name, the 1call name
+    and the operator — must agree on NaN-bearing input."""
     import math
 
     rows = [(1.0,), (2.0,), (float("nan"),), (3.0,), (None,)]
@@ -119,11 +114,6 @@ def test_nan_parity_python_vs_jvm_udaf(spark):
         "SELECT CAST(appx_median_bounded_1call(x, 100) AS DOUBLE) AS m FROM _nan_median"
     ).collect()[0].m
     assert math.isnan(py2) and math.isnan(jvm2)
-    # and the TWO-PHASE operator path (reservoir_partials carries an
-    # explicit null flag across mapInPandas since the r10 review pass) —
-    # all three members of the family must agree on NaN-bearing input
-    from rocana_impala_udfs_spark.operators.reservoir import appx_median_bounded_agg
-
     df = spark.createDataFrame(rows, "x double")
     two_phase = appx_median_bounded_agg(df, "x", 100).collect()[0].median
     assert two_phase == 3.0
@@ -319,9 +309,9 @@ def test_truncated_median_uses_prefix_order(spark):
 
 
 def test_string_return_full_precision_round_trip(spark):
-    # repr() round-trips the double exactly; the reference's stringstream
-    # would emit only 6 significant digits. Divergence is documented in
-    # make_appx_median_bounded_str_udf; CAST-back must be lossless.
+    # Double.toString round-trips the double exactly; the reference's
+    # stringstream would emit only 6 significant digits (that form is
+    # appx_median_bounded_ref_format). CAST-back must be lossless.
     df = spark.createDataFrame([(51504.36,), (51504.36,), (51504.36,)], "x double")
     df.createOrReplaceTempView("_prec3")
     row = spark.sql("SELECT CAST(appx_median_bounded(x, 10) AS DOUBLE) AS m FROM _prec3").collect()[0]
@@ -329,17 +319,28 @@ def test_string_return_full_precision_round_trip(spark):
 
 
 def test_string_return_cpp_stringstream_parity(spark):
-    # cpp_format=True pins byte parity with the reference's ToStringVal
-    # (median.cc:29-37): stringstream default precision(6) == C %g with 6
-    # significant digits. Cases cover integral ("500"), rounded to 6 sig
-    # digits ("51504.4"), and scientific switchover ("1e+07").
-    for val, expect in [(500.0, "500"), (51504.36, "51504.4"), (1e7, "1e+07")]:
-        df = spark.createDataFrame([(val,)] * 3, "x double")
-        df.createOrReplaceTempView("_cppfmt")
-        row = spark.sql(
-            "SELECT appx_median_bounded_ref_format(x, 10) AS s FROM _cppfmt"
-        ).collect()[0]
-        assert row.s == expect, (val, row.s)
+    # appx_median_bounded_ref_format pins byte parity with the reference's
+    # ToStringVal (median.cc:29-37): stringstream default precision(6) == C
+    # %g with 6 significant digits. Pinned cases cover integral ("500"),
+    # rounded to 6 sig digits ("51504.4"), and scientific switchover
+    # ("1e+07"); Python's "%.6g" is the same algorithm, so a spread of
+    # magnitudes, signs and rounding carries is checked against it.
+    pinned = {500.0: "500", 51504.36: "51504.4", 1e7: "1e+07"}
+    rng = np.random.default_rng(3)
+    vals = list(pinned) + [0.0, -0.0, 1e-5, 1.5e-7, 0.0001234567, 999999.5, 1234567.0,
+                           -51504.36, 2.5, 1e100, -3e-300, float("inf"), float("-inf")]
+    vals += [float(v) for v in rng.standard_normal(50) * 10.0 ** rng.integers(-8, 12, 50)]
+    spark.createDataFrame(list(enumerate(vals)), "g int, x double").createOrReplaceTempView(
+        "_cppfmt"
+    )
+    got = {
+        r.g: r.s
+        for r in spark.sql(
+            "SELECT g, appx_median_bounded_ref_format(x, 10) AS s FROM _cppfmt GROUP BY g"
+        ).collect()
+    }
+    assert [got[g] for g in range(len(pinned))] == list(pinned.values())
+    assert got == {g: "%.6g" % v for g, v in enumerate(vals)}
 
 
 def test_percentile_generalization_p50_equals_median(spark):
@@ -657,3 +658,118 @@ def test_sliding_frame_window_udaf_exact(spark):
     for r in got:
         frame = sorted(vals[r.g][max(0, r.i - 4): r.i + 1])
         assert r.m == frame[len(frame) // 2], (r.g, r.i)
+
+
+def _saturated_view(spark, name):
+    # 4 groups x 5000 rows, 4 fixed input partitions: every reservoir at
+    # k=200 saturates, so the results go through the seeded random paths
+    spark.range(0, 20_000, numPartitions=4).selectExpr(
+        "CAST(id % 4 AS INT) AS g", "CAST(pmod(hash(id), 100000) AS DOUBLE) AS x", "id"
+    ).createOrReplaceTempView(name)
+    return spark.table(name)
+
+
+def test_seeded_results_reproduce_at_fixed_partitioning(spark):
+    """At a fixed partitioning, two collects return identical rows for the
+    operator (explicit seed), the one-call SQL name and the partial/merge
+    pair (DEFAULT_SEED); a different seed draws a different sample."""
+    df = _saturated_view(spark, "_repro")
+
+    def op(seed):
+        return sorted(
+            tuple(r) for r in appx_median_bounded_agg(df, "x", 200, ["g"], seed=seed).collect()
+        )
+
+    def sql(text):
+        return sorted(tuple(r) for r in spark.sql(text).collect())
+
+    onecall = "SELECT g, appx_median_bounded_1call(x, 200) AS m FROM _repro GROUP BY g"
+    twophase = """WITH p AS (SELECT g, reservoir_partial(x, 200) AS s FROM _repro
+                             GROUP BY g, pmod(hash(id), 8))
+                  SELECT g, reservoir_merge_median(s) AS m FROM p GROUP BY g"""
+    assert op(7) == op(7)
+    assert op(7) != op(8)
+    assert sql(onecall) == sql(onecall)
+    assert sql(twophase) == sql(twophase)
+
+
+@pytest.mark.parametrize("parts", [1, 4, 16])
+def test_bounded_rank_within_bound_any_partitioning(spark, parts):
+    """Bounded regime (k=200 < 5000 rows per group) under any partitioning:
+    every group's answer is a sample median whose rank is within
+    2/sqrt(k) (four standard errors) of 0.5, for the operator, the
+    one-call name and the partial/merge pair."""
+    k = 200
+    base = _saturated_view(spark, "_rank_base")
+    df = base.repartition(parts)
+    df.createOrReplaceTempView("_rank")
+    vals = {}
+    for r in base.select("g", "x").collect():
+        vals.setdefault(r.g, []).append(r.x)
+    vals = {g: np.sort(v) for g, v in vals.items()}
+    results = {
+        "operator": appx_median_bounded_agg(df, "x", k, ["g"], out="m").collect(),
+        "onecall": spark.sql(
+            f"SELECT g, CAST(appx_median_bounded_1call(x, {k}) AS DOUBLE) AS m "
+            "FROM _rank GROUP BY g"
+        ).collect(),
+        "twophase": spark.sql(
+            f"""WITH p AS (SELECT g, reservoir_partial(x, {k}) AS s FROM _rank
+                           GROUP BY g, pmod(hash(id), 16))
+                SELECT g, reservoir_merge_median(s) AS m FROM p GROUP BY g"""
+        ).collect(),
+    }
+    for path, rows in results.items():
+        assert len(rows) == 4, path
+        for r in rows:
+            v = vals[r.g]
+            lo = np.searchsorted(v, r.m, "left") / v.size
+            hi = np.searchsorted(v, r.m, "right") / v.size
+            err = 0.0 if lo <= 0.5 <= hi else min(abs(lo - 0.5), abs(hi - 0.5))
+            assert err <= 2 / np.sqrt(k), (path, r.g, r.m, err)
+
+
+_PYTHON_EXEC_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "AggregateInPandas",
+                      "ArrowAggregatePython")
+
+
+@pytest.mark.parametrize("key", sorted(MEDIAN_QUERIES))
+def test_batch_median_plan_has_no_python_exec(spark, key):
+    """Every batch median key plans without a Python exec node; the ones
+    built on the reservoir aggregate plan it as a partial+final
+    ObjectHashAggregate."""
+    from conftest import SF_SMOKE
+
+    plan = MEDIAN_QUERIES[key](spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+    for node in _PYTHON_EXEC_NODES:
+        assert node not in plan, (key, node, plan)
+    if key.startswith(("appx_", "reservoir_")):
+        assert plan.count("ObjectHashAggregate") >= 2, (key, plan)
+
+
+def test_register_jvm_udaf_raises_without_jar(monkeypatch):
+    """The jar is the only batch path: a missing jar is an error that
+    names the class and the jar, not a warning."""
+    import types
+
+    from rocana_impala_udfs_spark import jvm
+
+    monkeypatch.setattr(jvm, "JAR_PATH", "/nonexistent/rocana-udaf.jar")
+    with pytest.raises(RuntimeError, match="AppxMedianBounded.*/nonexistent/rocana-udaf.jar"):
+        jvm.register_jvm_udaf(types.SimpleNamespace(sparkContext=types.SimpleNamespace()), 42)
+
+
+def test_operator_loads_jar_without_register_all(spark):
+    """The operators add the jar themselves when their context has not
+    loaded it yet; adding it again to a context that has is harmless."""
+    from rocana_impala_udfs_spark.operators.reservoir import reservoir_sample_agg
+
+    sc = spark.sparkContext
+    before = sc._rocana_reservoir_functions
+    del sc._rocana_reservoir_functions
+    try:
+        df = spark.createDataFrame([(float(i),) for i in range(5)], "x double")
+        assert reservoir_sample_agg(df, "x", 10).collect()[0].samples == [0.0, 1.0, 2.0, 3.0, 4.0]
+        assert sc._rocana_reservoir_functions is not None
+    finally:
+        sc._rocana_reservoir_functions = before

@@ -44,6 +44,19 @@ def source_hash(repo_root: str = ".") -> str:
     return h.hexdigest()
 
 
+def stable_ids(plan: str) -> str:
+    """Renumber expression ids (``#123``) and exchange plan ids in order of
+    first appearance within one plan. Spark hands both out from
+    process-wide counters, so without this a change to one query rewrites
+    the ids of every plan dumped after it."""
+    import re
+
+    for pattern in (r"(#)(\d+)", r"(plan_id=)(\d+)"):
+        ids: dict[str, int] = {}
+        plan = re.sub(pattern, lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids))), plan)
+    return plan
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "PLANS.md"
@@ -148,7 +161,7 @@ def main() -> None:
             continue
         df = qs[name](spark, sf_dir)
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = stable_ids(df._jdf.queryExecution().explainString(mode))
         # Literal control chars (e.g. the BPE fold's ␟/␞ separators) would
         # make the file read as binary to grep — escape them visibly.
         plan = "".join(ch if ch == "\n" or ch >= " " else f"\\x{ord(ch):02x}" for ch in plan)

@@ -13,10 +13,12 @@ Steps, all offline:
    whose sys.path holds the install target FIRST:
    - assert the package resolves to the install target,
    - assert the jar shipped as package data,
-   - start a SparkSession, ``register_all``, and run the reference's own
-     documented idiom ``CAST(appx_median_bounded(x, k) AS DOUBLE)`` plus
-     the one-statement JVM UDAF — the install is only "working" if the
-     SQL surface answers correctly from installed files.
+   - start a SparkSession, ``register_all``, and run every registered
+     median name — the reference's documented idiom
+     ``CAST(appx_median_bounded(x, k) AS DOUBLE)`` included — and the
+     ``reservoir_partial``/``reservoir_merge_median`` pair: the install is
+     only "working" if the SQL surface answers correctly from installed
+     files (the jar ships as package data).
 
 Exit 0 iff everything passes.  Usage: python tools/verify_install.py
 """
@@ -43,16 +45,22 @@ from rocana_impala_udfs_spark import get_spark
 from rocana_impala_udfs_spark.register import register_all
 spark = get_spark("verify-install")
 register_all(spark)
-spark.range(0, 101).selectExpr("CAST(id AS DOUBLE) AS x").createOrReplaceTempView("numbers")
-# two statements: Spark cannot mix a grouped-agg pandas UDF with a
-# non-pandas aggregate (the JVM UDAF) in one Aggregate node
-m = spark.sql(
-    "SELECT CAST(appx_median_bounded(x, 200) AS DOUBLE) AS m FROM numbers"
+spark.range(0, 101).selectExpr("CAST(id AS DOUBLE) AS x", "id").createOrReplaceTempView("numbers")
+# every registered median name, in one statement, plus the partial/merge pair
+row = spark.sql(
+    "SELECT CAST(appx_median_bounded(x, 200) AS DOUBLE) AS m,"
+    " CAST(appx_median_bounded_1call(x, 200) AS DOUBLE) AS m1,"
+    " appx_median_bounded_ref_format(x, 200) AS ref,"
+    " appx_median_bounded_double(x, 200) AS d,"
+    " appx_percentile_bounded(x, 0.9, 200) AS p90,"
+    " size(reservoir_sample(x, 200)) AS n FROM numbers"
+).collect()[0]
+assert tuple(row) == (50.0, 50.0, "50", 50.0, 90.0, 101), row
+merged = spark.sql(
+    "WITH p AS (SELECT reservoir_partial(x, 200) AS s FROM numbers GROUP BY id % 4)"
+    " SELECT reservoir_merge_median(s) AS m FROM p"
 ).collect()[0].m
-m1 = spark.sql(
-    "SELECT CAST(appx_median_bounded_1call(x, 200) AS DOUBLE) AS m1 FROM numbers"
-).collect()[0].m1
-assert m == 50.0 and m1 == 50.0, (m, m1)
+assert merged == 50.0, merged
 print("INSTALLED-PACKAGE CHECK OK:", pkg_dir)
 """
 
