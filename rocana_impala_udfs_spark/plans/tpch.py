@@ -225,7 +225,9 @@ GROUP BY 1, 2
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 customers by revenue lost to returns in 1996H1. orderBy+limit
     plans as TakeOrderedAndProject (no full sort); c_custkey tiebreak makes
-    the cut deterministic in both engines."""
+    the cut deterministic in both engines, and the DECIMAL revenue sum
+    (_sum_rev_exact) keeps the rounded totals from flipping a half cent
+    with summation order."""
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
@@ -237,14 +239,15 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.round(F.sum(_rev()), 2).alias("revenue"))
+        .agg(_sum_rev_exact("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
     )
 
 
 ORACLE_Q10 = """
-SELECT c_custkey, c_name, n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+SELECT c_custkey, c_name, n_name,
+       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey

@@ -374,3 +374,82 @@ def test_bloom_parquet_writes_real_footers_and_prunes(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "o_orderkey" in plan
     assert df.count() == 0
+
+
+def test_load_table_infers_schema_once_per_file_version(spark):
+    """The first load of a file version may run Spark's footer-inference
+    job; every later load of the same version reads with the memoized
+    schema and submits no job at all, and that schema is exactly what a
+    fresh inference returns."""
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    load_table(spark, SF, "lineitem")
+    before = set(tracker.getJobIdsForGroup(None))
+    df = load_table(spark, SF, "lineitem")
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert df.schema == spark.read.parquet(f"{SF}/lineitem.parquet").schema
+
+
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_load_table_sees_rewritten_file(spark, tmp_path, layout):
+    """Rewriting the table at the same path with a different column set
+    changes the file signature, so the next load re-infers the schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+
+    def write(table):
+        if layout == "file":
+            pq.write_table(table, path)
+        else:
+            spark.createDataFrame(table.to_pandas()).write.mode("overwrite").parquet(path)
+
+    write(pa.table({"a": [1, 2, 3]}))
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    write(pa.table({"b": ["x", "y"], "c": [1.5, 2.5]}))
+    back = load_table(spark, str(tmp_path), "t")
+    assert back.schema == spark.read.parquet(path).schema
+    assert sorted(back.collect()) == [("x", 1.5), ("y", 2.5)]
+
+
+def test_load_table_missing_path_raises_analysis_exception(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException):
+        load_table(spark, str(tmp_path / "absent"), "lineitem")
+
+
+def test_schema_memo_keys_on_timestamp_confs(spark):
+    """The timestamp confs change what Spark infers for events.ts
+    (inferTimestampNTZ picks TIMESTAMP_NTZ vs TIMESTAMP on Spark 4.1+;
+    nanosAsLong picks BIGINT nanos on runtimes that honour it), so both
+    are part of the memo key: a schema memoized under one setting is never
+    served under another, and load_table's events.ts is TIMESTAMP with the
+    same values whether nanosAsLong is on or off."""
+    from pyspark.sql.types import TimestampType
+
+    from rocana_impala_udfs_spark.sources.io import _read_parquet
+
+    path = f"{SF}/events.parquet"
+    keys = (
+        "spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.parquet.inferTimestampNTZ.enabled",
+    )
+    prior = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        seen = []
+        for flags in (("false", "true"), ("true", "false"), ("false", "false"), ("true", "true")):
+            for k, flag in zip(keys, flags):
+                spark.conf.set(k, flag)
+            assert _read_parquet(spark, path).schema == spark.read.parquet(path).schema
+            ev = load_table(spark, SF, "events")
+            assert isinstance(ev.schema["ts"].dataType, TimestampType)
+            seen.append(ev.select("ts").orderBy("ts").limit(5).collect())
+        assert all(s == seen[0] for s in seen)
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -45,13 +45,14 @@ def source_hash(repo_root: str = ".") -> str:
 
 
 def stable_ids(plan: str) -> str:
-    """Renumber expression ids (``#123``) and exchange plan ids in order of
-    first appearance within one plan. Spark hands both out from
-    process-wide counters, so without this a change to one query rewrites
-    the ids of every plan dumped after it."""
+    """Renumber expression ids (``#123``), exchange plan ids and RDD ids
+    (``MapPartitionsRDD[52]``) in order of first appearance within one
+    plan. Spark hands all three out from process-wide counters, so without
+    this a change to one query (or to the jobs it submits while it is
+    built) rewrites the ids of every plan dumped after it."""
     import re
 
-    for pattern in (r"(#)(\d+)", r"(plan_id=)(\d+)"):
+    for pattern in (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)"):
         ids: dict[str, int] = {}
         plan = re.sub(pattern, lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids))), plan)
     return plan

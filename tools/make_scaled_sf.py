@@ -70,10 +70,13 @@ def main() -> None:
         # measure the operators, not a layout artifact. DuckDB's default
         # 122 880-row groups already split the big tables at 10×+; the
         # explicit size also splits the small ones (documents, embeddings).
+        # The size is capped at that default: uncapped, n/16 made the big
+        # 100× tables exactly 16 row groups, capping scan parallelism at
+        # 16 tasks.
         n_src = con.execute(
             f"SELECT count(*) FROM read_parquet('{src}/{table}.parquet')"
         ).fetchone()[0]
-        rgs = max(2048, (n_src * mult) // 16)
+        rgs = min(122880, max(2048, (n_src * mult) // 16))
         con.execute(
             f"COPY ({union}) TO '{out}/{table}.parquet'"
             f" (FORMAT PARQUET, ROW_GROUP_SIZE {rgs})"
