@@ -1009,14 +1009,17 @@ def q_eval_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one row per method survives the agg: broadcast it (no estimate
         # for an agg-over-union; SMJ otherwise)
         dims.join(F.broadcast(grouped), "method", "left")
+        # a method with no candidates has no grouped row: it scores 0, like
+        # a method whose candidates have no graded hits
         .select(
             "method",
             "n_queries",
-            "sum_dcg6",
-            (
+            F.coalesce("sum_dcg6", F.lit(0)).alias("sum_dcg6"),
+            F.coalesce(
                 F.col("sum_dcg6").cast("double")
                 / F.col("n_queries").cast("double")
-                / F.lit(float(_IDCG6_AT_5))
+                / F.lit(float(_IDCG6_AT_5)),
+                F.lit(0.0),
             ).alias("mean_ndcg"),
         )
         # ordered emit via TakeOrderedAndProject (see ann_recall_report)
@@ -1040,8 +1043,8 @@ def _oracle_eval_ndcg() -> str:
         parts.append(
             f"""
 SELECT '{name}' AS method, CAST({nq} AS BIGINT) AS n_queries,
-       CAST(sum({term}) AS BIGINT) AS sum_dcg6,
-       CAST(CAST(sum({term}) AS BIGINT) AS DOUBLE) / {float(nq)} / {float(_IDCG6_AT_5)} AS mean_ndcg
+       coalesce(CAST(sum({term}) AS BIGINT), 0) AS sum_dcg6,
+       CAST(coalesce(CAST(sum({term}) AS BIGINT), 0) AS DOUBLE) / {float(nq)} / {float(_IDCG6_AT_5)} AS mean_ndcg
 FROM (SELECT query_id, neighbor_id, rk FROM ({sql})) m
 LEFT JOIN rel ON m.query_id = rel.query_id AND m.neighbor_id = rel.neighbor_id"""
         )

@@ -273,9 +273,9 @@ def run_foreach_batch_merge(
     def _append(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        batch_df.withColumn("_merge_bid", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(log_dir)
+        batch_df.withColumn(
+            "_merge_bid", F.lit(batch_id).cast("bigint")
+        ).write.mode("append").parquet(log_dir)
 
     ov = _stream_conf_override(out, python_stateful, replay_dir)
     if ov is not None:
@@ -298,9 +298,13 @@ def run_foreach_batch_merge(
                 out.sparkSession.conf.set(ov[0], ov[2])
     from pyspark.sql import Window
     from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    spark = out.sparkSession
-    log = spark.read.parquet(log_dir)
+    # the log's schema is known: reading with it skips the footer-inference
+    # job a fresh directory would cost, and a replay that appended nothing
+    # reads as an empty target instead of failing to infer a schema
+    log_schema = StructType(out.schema.fields + [StructField("_merge_bid", LongType())])
+    log = out.sparkSession.read.schema(log_schema).parquet(log_dir)
     # the log's total rows ARE the cumulative sink traffic: exactly the
     # delta rows every trigger appended (foreachBatch progress reports
     # numOutputRows=-1, so the log is the ground truth here)

@@ -2108,6 +2108,36 @@ def test_ndcg_matches_bruteforce_formula(spark):
         assert 0.0 <= row.mean_ndcg <= 1.0
 
 
+
+def test_ndcg_method_without_candidates_scores_zero_on_both_engines(
+    spark, monkeypatch
+):
+    """A method that returns no candidates scores sum_dcg6 = 0 and
+    mean_ndcg = 0.0 in eval_ndcg_report and in its DuckDB oracle alike
+    (not NULL), the same as a method whose candidates have no graded
+    hits; the other methods are unaffected."""
+    import duckdb
+
+    from rocana_impala_udfs_spark.plans import pipeline
+    from rocana_impala_udfs_spark.sources.io import TABLES
+
+    lsh_topk, lsh_sql = similarity.lsh_bucket_topk, pipeline.ORACLE_ANN_LSH
+    monkeypatch.setattr(
+        similarity,
+        "lsh_bucket_topk",
+        lambda *a, **k: lsh_topk(*a, **k).filter(F.lit(False)),
+    )
+    monkeypatch.setattr(
+        pipeline, "ORACLE_ANN_LSH", f"SELECT * FROM ({lsh_sql}) WHERE false"
+    )
+    got = [tuple(r) for r in pipeline.q_eval_ndcg_report(spark, SF).collect()]
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    want = con.execute(pipeline._oracle_eval_ndcg()).fetchall()
+    assert ("lsh", 20, 0, 0.0) in got
+    assert got == want
+
 def test_auc_invariant_under_monotone_transform(spark, tmp_path):
     """Property: AUC depends only on the score ORDER — writing a corpus
     whose n_chars are squared (a strictly monotone transform on the

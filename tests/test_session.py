@@ -229,3 +229,79 @@ def test_run_to_table_applies_and_restores_state_partitions(spark):
         spark.sparkContext.defaultParallelism
     ]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+# ---------------------------------------------------------------------------
+# DataFrame call-site capture is off in the shipped session
+# ---------------------------------------------------------------------------
+# PySpark caches spark.python.sql.dataFrameDebugging.enabled process-wide on
+# the first wrapped Column call, so the shipped default is only observable
+# in an interpreter whose first session came from get_spark — a fresh
+# subprocess, not the shared test session.
+
+_BUILD_PROBE = """
+import json, sys
+from py4j.clientserver import ClientServerConnection
+from pyspark.errors.utils import is_debugging_enabled
+from rocana_impala_udfs_spark import get_spark
+from rocana_impala_udfs_spark.plans.relational import q1_pricing_summary
+
+spark = get_spark("callsite-probe", master="local[1]", shuffle_partitions=1)
+sent = []
+send = ClientServerConnection.send_command
+
+def spy(self, command, *args, **kwargs):
+    sent.append(command)
+    return send(self, command, *args, **kwargs)
+
+ClientServerConnection.send_command = spy
+try:
+    q1_pricing_summary(spark, sys.argv[1])
+finally:
+    ClientServerConnection.send_command = send
+print(json.dumps({
+    "ipython": "IPython" in sys.modules,
+    "debugging": is_debugging_enabled(),
+    "commands": len(sent),
+    "origin_commands": sum("PySparkCurrentOrigin" in c for c in sent),
+}))
+spark.stop()
+"""
+
+
+@pytest.fixture(scope="module")
+def fresh_build_probe():
+    """Build q1_pricing_summary at sf0.001 in a fresh interpreter and
+    report what the build did to the driver."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, env.get("PYTHONPATH")) if p
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", _BUILD_PROBE, SF_SMOKE],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-4000:]
+    return json.loads(r.stdout.strip().splitlines()[-1])
+
+
+def test_plan_build_does_not_import_ipython(fresh_build_probe):
+    assert fresh_build_probe["ipython"] is False
+
+
+def test_dataframe_debugging_disabled_in_fresh_driver(fresh_build_probe):
+    assert fresh_build_probe["debugging"] is False
+
+
+def test_plan_build_sends_no_call_site_commands(fresh_build_probe):
+    assert fresh_build_probe["commands"] > 0, "the spy saw no py4j traffic"
+    assert fresh_build_probe["origin_commands"] == 0

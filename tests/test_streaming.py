@@ -1983,3 +1983,54 @@ def test_foreach_batch_merge_target_is_keyed(spark):
         by_g[g].append(rk)
     for g, rks in by_g.items():
         assert sorted(rks) == list(range(1, len(rks) + 1))
+
+
+def test_foreach_batch_merge_of_empty_replay_is_empty(spark, tmp_path):
+    """The upsert log is read with its known schema, so a replay that
+    appended nothing yields an empty keyed target with the query's columns
+    (schema inference over the empty log directory would raise
+    UNABLE_TO_INFER_SCHEMA instead)."""
+    from rocana_impala_udfs_spark.streaming.replay import run_foreach_batch_merge
+
+    ev = load_table(spark, SF, "events")
+    src = tmp_path / "empty_replay"
+    src.mkdir()
+    stream = spark.readStream.schema(ev.schema).parquet(str(src))
+    out = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    merged = run_foreach_batch_merge(out, ["event_type"], replay_dir=str(src))
+    assert merged.columns == ["event_type", "n"]
+    assert merged.collect() == []
+
+
+@pytest.mark.parametrize(
+    "key,python_stateful",
+    [
+        ("stream_topk_events_per_type", False),
+        ("stream_topk_events_merge", False),
+        ("stream_tws_bitmap_map_state", False),
+        ("stream_tws_topk_list_state", False),
+        ("stream_tws_lsh_index_candidates", True),
+        ("stream_tws_lsh_bounded_bucket", True),
+    ],
+)
+def test_stream_key_state_partition_floor_declaration(
+    spark, monkeypatch, key, python_stateful
+):
+    """Which state-partition floor each streaming key sizes with: the
+    domain-bounded grouped keys declare the machinery floor
+    (python_stateful=False), while the LSH bucket indexes, whose Python
+    state spans the whole bucket key space, are detected as
+    Python-stateful and keep the core-count floor."""
+    from rocana_impala_udfs_spark import session
+    from rocana_impala_udfs_spark.plans.temporal import TEMPORAL_QUERIES
+
+    seen = []
+    autosize = session.autosize_stream_state_partitions
+
+    def spy(*args, python_stateful=False):
+        seen.append(python_stateful)
+        return autosize(*args, python_stateful=python_stateful)
+
+    monkeypatch.setattr(session, "autosize_stream_state_partitions", spy)
+    TEMPORAL_QUERIES[key](spark, SF)
+    assert seen and all(flag is python_stateful for flag in seen), seen
